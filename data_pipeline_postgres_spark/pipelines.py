@@ -30,7 +30,11 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .plans.flagship import material_demand, product_demand_view
+from .plans.flagship import (
+    MATERIAL_DEMAND_ORDER,
+    material_demand_rows,
+    product_demand_view,
+)
 
 
 def raw_path(work_dir: str) -> str:
@@ -71,11 +75,13 @@ def extract_day(
 def transform_day(spark: SparkSession, work_dir: str, ds: str) -> None:
     """DAG-02 analog: read ONE raw day partition (pruned scan),
     run the material-demand transform, overwrite that day's
-    transformed partition."""
+    transformed partition. The rows are written unsorted: a
+    partitioned file write has no order to keep, and a global sort
+    would add a range-sampling job and a range exchange per day."""
     raw = spark.read.parquet(raw_path(work_dir)).filter(
         F.col("date") == F.lit(ds).cast("date")
     )
-    out = material_demand(raw)
+    out = material_demand_rows(raw)
     (
         out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -125,7 +131,11 @@ def transform_stream(
     grouped aggregation, AvailableNow drain to a memory sink.
 
     Emits the same (date, shop_id, raw_material, demand_kg) rows as
-    the batch transform over the whole raw zone.
+    the batch transform over the whole raw zone, in the same order.
+    The stream aggregates the unordered rows and the order is applied
+    when the memory table is read back: a sort inside the stream makes
+    every micro-batch run the stateful aggregation twice (range
+    sampling, then the real job), committing each state store twice.
     """
     raw_schema = spark.read.parquet(raw_path(work_dir)).schema
     stream = (
@@ -133,7 +143,7 @@ def transform_stream(
         .option("basePath", raw_path(work_dir))
         .parquet(os.path.join(raw_path(work_dir), "*"))
     )
-    out = material_demand(stream)
+    out = material_demand_rows(stream)
     q = (
         out.writeStream.format("memory")
         .queryName("pipeline_transform_stream")
@@ -143,4 +153,6 @@ def transform_stream(
         .start()
     )
     q.awaitTermination()
-    return spark.table("pipeline_transform_stream")
+    return spark.table("pipeline_transform_stream").orderBy(
+        *MATERIAL_DEMAND_ORDER
+    )

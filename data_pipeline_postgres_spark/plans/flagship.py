@@ -66,9 +66,18 @@ def product_demand_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def material_demand(product_demand: DataFrame) -> DataFrame:
+MATERIAL_DEMAND_ORDER = ("date", "shop_id", "raw_material")
+
+
+def material_demand_rows(product_demand: DataFrame) -> DataFrame:
     """Pandas-dialect (live DAG) variant: emits ``demand_kg``
-    (reference: mnt/dags/02datalake_to_datawarehouse.py:59-95)."""
+    (reference: mnt/dags/02datalake_to_datawarehouse.py:59-95), in no
+    particular order.
+
+    The unordered form is what writers and streams consume: a
+    ``partitionBy("date")`` write needs no global order, and on a
+    stream a global sort makes Spark run the stateful aggregation
+    twice per micro-batch (a range-sampling job, then the real one)."""
     grams = derive_material_grams(product_demand)
     agg = group_sum(
         grams,
@@ -76,11 +85,15 @@ def material_demand(product_demand: DataFrame) -> DataFrame:
         {f"{m}_g": m for m in MATERIALS},
     )
     long = unpivot_melt(agg, ["date", "shop_id"], list(MATERIALS), "raw_material", "demand")
-    return (
-        long.withColumn("demand_kg", F.col("demand") / F.lit(1000.0))
-        .drop("demand")
-        .orderBy("date", "shop_id", "raw_material")
+    return long.withColumn("demand_kg", F.col("demand") / F.lit(1000.0)).drop(
+        "demand"
     )
+
+
+def material_demand(product_demand: DataFrame) -> DataFrame:
+    """``material_demand_rows`` in the reference's presentation order
+    ``(date, shop_id, raw_material)``."""
+    return material_demand_rows(product_demand).orderBy(*MATERIAL_DEMAND_ORDER)
 
 
 def material_demand_grams(product_demand: DataFrame) -> DataFrame:

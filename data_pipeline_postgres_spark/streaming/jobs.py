@@ -164,16 +164,20 @@ def _split_source(
 class _shuffle_partitions:
     """Temporarily pin the shuffle-partition count for a streaming
     query. The state store allocates one instance per shuffle
-    partition; for a small hot-key space that fixed cost (store init +
-    one Python worker round per partition) dominates, so stateful
-    queries pick a partition count sized to their key cardinality, not
-    the session default. Safe here because each run starts from a
-    fresh checkpoint (the count is frozen into a checkpoint once
-    created)."""
+    partition; for a small hot-key space that fixed cost (store init,
+    one delta-file commit per micro-batch, one Python worker round per
+    partition) dominates, so stateful queries pick a partition count
+    sized to their key cardinality, not the session default.
+
+    The count is capped at ``defaultParallelism`` (the cores a local
+    session owns): more state partitions than cores only adds a second
+    task wave of per-partition commits. Safe here because each run
+    starts from a fresh checkpoint (the count is frozen into a
+    checkpoint once created)."""
 
     def __init__(self, spark: SparkSession, n: int):
         self.spark = spark
-        self.n = str(n)
+        self.n = str(min(n, spark.sparkContext.defaultParallelism))
 
     def __enter__(self) -> None:
         self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")

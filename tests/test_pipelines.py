@@ -8,6 +8,7 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.readwriter import DataStreamWriter
 
 from data_pipeline_postgres_spark import pipelines
 from data_pipeline_postgres_spark.plans.flagship import flagship
@@ -113,10 +114,29 @@ def test_out_of_order_day_replay(spark):
     assert got == want
 
 
-def test_streaming_transform_equals_batch(spark, warehouse):
+def test_streaming_transform_equals_batch(spark, warehouse, monkeypatch):
+    """The stream equals the batch transform, in key order. The drain
+    aggregates unordered rows (no global sort inside the stream, so
+    each micro-batch runs the stateful aggregation and commits each
+    state store once, leaving no temp files behind); the order is
+    applied when the sink is read back."""
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
     ckpt = os.path.join(WORK, "ckpt")
     if os.path.exists(ckpt):
         shutil.rmtree(ckpt)
-    stream = pipelines.transform_stream(spark, WORK, ckpt)
-    got = sorted(map(tuple, stream.collect()))
-    assert got == warehouse
+    rows = pipelines.transform_stream(spark, WORK, ckpt).collect()
+    assert sorted(map(tuple, rows)) == warehouse
+    keys = [(r["date"], r["shop_id"], r["raw_material"]) for r in rows]
+    assert keys == sorted(keys)
+    tmp = [f for _, _, fs in os.walk(ckpt) for f in fs if f.endswith(".tmp")]
+    assert tmp == []
+    (q,) = started
+    assert "RangePartitioning" not in q._jsq.explainInternal(False)

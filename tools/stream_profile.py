@@ -1,7 +1,13 @@
 """Profile streaming fixed cost per stream (r16 item 3, guide SS1):
 attach a StreamingQueryListener to capture each micro-batch's
 durationMs breakdown (addBatch, walCommit, queryPlanning, ...), time
-each stream job end-to-end, and report where the ~2 s goes.
+each stream job end-to-end, and report where the ~2 s goes. Beside
+``durationMs`` it prints each stateful operator's summed state-store
+``commitTimeMs``, its ``numShufflePartitions`` and its final
+``numRowsTotal``: the per-partition commit is the fixed cost a small
+drain pays once per state partition per micro-batch.
+
+    python tools/stream_profile.py [query_name ...]
 
 Run SOLO (never with bench/drive).
 """
@@ -10,7 +16,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -37,6 +43,15 @@ class L(StreamingQueryListener):
                 "batchId": p.batchId,
                 "durationMs": dict(p.durationMs),
                 "numInputRows": p.numInputRows,
+                "stateOperators": [
+                    {
+                        "operatorName": op.operatorName,
+                        "commitTimeMs": op.commitTimeMs,
+                        "numShufflePartitions": op.numShufflePartitions,
+                        "numRowsTotal": op.numRowsTotal,
+                    }
+                    for op in p.stateOperators
+                ],
             })
         )
 
@@ -84,6 +99,20 @@ for name in NAMES:
           f"final_action={t1-t_built:.2f}s n_batches={len(batches)} "
           f"sum_trigger={total_batch_ms/1000:.2f}s")
     print("   durationMs sums:", json.dumps(agg))
+    # operators keep their position across a query's micro-batches
+    ops = {}
+    for b in batches:
+        for i, op in enumerate(b[2]["stateOperators"]):
+            o = ops.setdefault(i, {"operatorName": op["operatorName"],
+                                   "commitTimeMs": 0})
+            o["commitTimeMs"] += op["commitTimeMs"]
+            o["numShufflePartitions"] = op["numShufflePartitions"]
+            o["numRowsTotal"] = op["numRowsTotal"]
+    for i, o in sorted(ops.items()):
+        print(f"   state op {i} {o['operatorName']}: "
+              f"commitTimeMs={o['commitTimeMs']} "
+              f"numShufflePartitions={o['numShufflePartitions']} "
+              f"numRowsTotal={o['numRowsTotal']}")
     if starts and batches:
         first_rel = batches[0][1] - t0
         print(f"   first batch ended at +{first_rel:.2f}s after build start")
